@@ -1,0 +1,42 @@
+package perfbench
+
+/** Minimal JSON rendering for result lines and result files (maps keep
+  * insertion order; doubles print with all their digits). */
+object Json {
+  def render(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => render(x)
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double =>
+      require(!d.isNaN && !d.isInfinite, s"non-finite number $d")
+      d.toString
+    case f: Float => render(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => quote(k.toString) + ":" + render(x) }
+        .mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(render).mkString("[", ",", "]")
+    case xs: Array[_] => render(xs.toSeq)
+    case other => quote(other.toString)
+  }
+
+  def quote(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case '\n' => b ++= "\\n"
+      case '\r' => b ++= "\\r"
+      case '\t' => b ++= "\\t"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    b += '"'
+    b.toString
+  }
+
+  def obj(kvs: (String, Any)*): scala.collection.mutable.LinkedHashMap[String, Any] =
+    scala.collection.mutable.LinkedHashMap(kvs: _*)
+}
