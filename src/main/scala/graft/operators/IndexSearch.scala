@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
@@ -17,11 +17,26 @@ import scala.collection.mutable
   * (the caller-side re-verification of MemoryVectorIndex.cs:237-241).
   *
   * Physical strategy (ours, not the reference's):
-  *  - `searchBoxLocal`: collect the index to the driver once and walk it
-  *    in memory — the index is ~2N tiny rows; for N up to a few million
+  *  - `searchBoxLocal`: collect the index to the driver and walk it in
+  *    memory — the index is ~2N tiny rows; for N up to a few million
   *    nodes this is a single collect + an in-memory descent, and the
   *    result is a broadcast-able id set. This mirrors the reference's SQL
   *    recursive CTE, which also runs on one node.
+  *
+  *    Walk memo (every local walk goes through [[localTree]]): for a
+  *    CACHED index the built rangeId → node map is kept, keyed weakly on
+  *    the identity of the cache entry Spark's CacheManager serves the
+  *    index from, so repeated queries pay no count and no collect. The
+  *    memo is exactly as fresh as Spark's own cache: `unpersist` or a
+  *    re-cache of new contents yields a different (or no) entry, and a
+  *    cleared entry's map is dropped at the next lookup. An uncached
+  *    index — parquet-loaded, `localCheckpoint`ed — is counted and
+  *    collected on every call, since its files or blocks can change
+  *    under a live DataFrame. Driver memory: one compact map per cached
+  *    index, holding at most the `localNodeLimit` of the guarded call
+  *    that built it (the unguarded `searchBoxLocal` and
+  *    `searchBoxWithMetrics` collect the whole index, as they always
+  *    did); never the collected Rows.
   *  - `searchBoxDistributed`: iterative frontier loop — per level, join
   *    the (tiny, broadcast) frontier against the index relation. Survives
   *    indexes too large for any single node; ~depth joins, each
@@ -31,13 +46,11 @@ object IndexSearch {
 
   /** Candidate leaf ids within the box (auto local/distributed). */
   def searchBox(index: DataFrame, q: Seq[Double], domain: Double,
-                localNodeLimit: Long = 2_000_000L): DataFrame = {
-    val probe = math.min(localNodeLimit + 1, Int.MaxValue.toLong - 1).toInt
-    if (index.limit(probe).count() <= localNodeLimit)
-      searchBoxLocal(index, q, domain)
-    else
-      searchBoxDistributed(index, q, domain)
-  }
+                localNodeLimit: Long = 2_000_000L): DataFrame =
+    localTree(index, localNodeLimit) match {
+      case Some(tree) => walkIds(index, tree, q, domain, l2 = false)
+      case None => searchBoxDistributed(index, q, domain)
+    }
 
   /** Exact vicinity search: candidate ids from the L2 budget descent
     * (strictly tighter than the box test for ball queries), re-checked
@@ -59,21 +72,71 @@ object IndexSearch {
     * so searchExact's re-check stays exact. Indexes too large to collect
     * fall back to the distributed box descent (a looser superset). */
   def searchBall(index: DataFrame, q: Seq[Double], radius: Double,
-                 localNodeLimit: Long = 2_000_000L): DataFrame = {
-    val probe = math.min(localNodeLimit + 1, Int.MaxValue.toLong - 1).toInt
-    if (index.limit(probe).count() <= localNodeLimit) {
-      val spark = index.sparkSession
-      import spark.implicits._
-      val nodes = index.select("rangeId", "dimension", "mid", "lowRangeId",
-        "highRangeId", "id").collect()
-      walkTree(nodes, 0, q, radius, l2 = true).ids.toDF("id")
-    } else searchBoxDistributed(index, q, radius)
+                 localNodeLimit: Long = 2_000_000L): DataFrame =
+    localTree(index, localNodeLimit) match {
+      case Some(tree) => walkIds(index, tree, q, radius, l2 = true)
+      case None => searchBoxDistributed(index, q, radius)
+    }
+
+  private def walkIds(index: DataFrame, tree: mutable.LongMap[WalkNode],
+                      q: Seq[Double], domain: Double, l2: Boolean): DataFrame = {
+    val spark = index.sparkSession
+    import spark.implicits._
+    walkMap(tree, q, domain, l2).ids.toDF("id")
+  }
+
+  /** A collected tree: its rangeId → node map and its index row count
+    * (what the `localNodeLimit` guard compares against). */
+  private final case class LocalTree(byId: mutable.LongMap[WalkNode], rows: Long)
+
+  /** Trees of cached indexes, keyed weakly on their cache entry's
+    * identity (the entry is a case class, so an equality-keyed
+    * WeakHashMap would conflate entries of equal plans). */
+  private val treeMemo =
+    mutable.ArrayBuffer.empty[(java.lang.ref.WeakReference[GraftSqlShim.CacheEntry], LocalTree)]
+
+  private def memoized(entry: GraftSqlShim.CacheEntry): Option[LocalTree] =
+    treeMemo.synchronized {
+      treeMemo.filterInPlace { case (ref, _) =>
+        val e = ref.get
+        e != null && e.isCachedColumnBuffersLoaded
+      }
+      treeMemo.collectFirst { case (ref, t) if ref.get eq entry => t }
+    }
+
+  /** The index's in-memory walk map, or None when it holds more than
+    * `localNodeLimit` rows (the caller then descends distributed). A
+    * cached index is counted and collected once per cache entry; any
+    * other index on every call. */
+  private[graft] def localTree(index: DataFrame,
+                               localNodeLimit: Long = Long.MaxValue)
+      : Option[mutable.LongMap[WalkNode]] = {
+    val entry = GraftSqlShim.cacheEntry(index)
+    entry.flatMap(memoized) match {
+      case Some(t) => Option.when(t.rows <= localNodeLimit)(t.byId)
+      case None =>
+        val fits = localNodeLimit == Long.MaxValue || {
+          val probe = math.min(localNodeLimit + 1, Int.MaxValue.toLong - 1).toInt
+          index.limit(probe).count() <= localNodeLimit
+        }
+        Option.when(fits) {
+          val nodes = index.select("rangeId", "dimension", "mid", "lowRangeId",
+            "highRangeId", "id").collect()
+          val t = LocalTree(buildWalkMap(nodes, 0), nodes.length.toLong)
+          entry.foreach(e => treeMemo.synchronized {
+            if (!treeMemo.exists(_._1.get eq e))
+              treeMemo += ((new java.lang.ref.WeakReference(e), t))
+          })
+          t.byId
+        }
+    }
   }
 
   /** In-memory descent over one tree's collected node rows; `off` is the
     * column offset of rangeId within each Row (rows after it must be
     * dimension, mid, lowRangeId, highRangeId, id — the index schema).
-    * Shared by the single-index and per-document local walks. */
+    * Used by the per-document walks; single-index walks take their map
+    * from [[localTree]]. */
   private[graft] final case class WalkResult(ids: Seq[Long], nodesVisited: Long)
 
   /** One tree node of the collected walk structure (serializable so the
@@ -83,7 +146,8 @@ object IndexSearch {
       ids: mutable.ArrayBuffer[Long], internal: Boolean)
 
   /** Build the rangeId → node map once; walk it many times
-    * ([[walkMap]]) — the batch path amortizes this across Q queries. */
+    * ([[walkMap]]) — across the Q queries of a batch, and across calls
+    * on a cached index ([[localTree]]). */
   private[graft] def buildWalkMap(rows: Iterable[org.apache.spark.sql.Row],
                                   off: Int): mutable.LongMap[WalkNode] = {
     val byId = mutable.LongMap.empty[WalkNode]
@@ -180,15 +244,10 @@ object IndexSearch {
     WalkResult(out.toSeq, visited)
   }
 
-  /** Driver-local descent (index collected once). Returns one column
-    * `id` of candidate point ids. */
-  def searchBoxLocal(index: DataFrame, q: Seq[Double], domain: Double): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val nodes = index.select("rangeId", "dimension", "mid", "lowRangeId",
-      "highRangeId", "id").collect()
-    walkTree(nodes, 0, q, domain).ids.toDF("id")
-  }
+  /** Driver-local descent (index collected, or taken from the walk
+    * memo). Returns one column `id` of candidate point ids. */
+  def searchBoxLocal(index: DataFrame, q: Seq[Double], domain: Double): DataFrame =
+    walkIds(index, localTree(index).get, q, domain, l2 = false)
 
   /** Per-document box search over a (docId, ...) index built by
     * buildIndexPerDoc — mirrors dbo.Search's optional @docId
@@ -260,16 +319,15 @@ object IndexSearch {
   case class SearchMetrics(nodesVisited: Long, leavesEmitted: Long,
                            candidates: Long)
 
-  /** Box (or L2-budget) search with probe accounting: one collect, one
-    * instrumented walk (the same walkTree the plain local search uses). */
+  /** Box (or L2-budget) search with probe accounting: one local tree
+    * ([[localTree]]), one instrumented walk (the same walkMap the plain
+    * local search uses). */
   def searchBoxWithMetrics(index: DataFrame, q: Seq[Double], domain: Double,
                            l2: Boolean = false)
       : (DataFrame, SearchMetrics) = {
     val spark = index.sparkSession
     import spark.implicits._
-    val nodes = index.select("rangeId", "dimension", "mid", "lowRangeId",
-      "highRangeId", "id").collect()
-    val result = walkTree(nodes, 0, q, domain, l2)
+    val result = walkMap(localTree(index).get, q, domain, l2)
     (result.ids.toDF("id"),
       SearchMetrics(result.nodesVisited, result.ids.size.toLong,
         result.ids.size.toLong))
@@ -321,11 +379,9 @@ object IndexSearch {
     // roles the data sizes dictate (queries partitioned, index
     // broadcast). No loop, no per-level jobs. The frontier-join loop
     // below remains the path for indexes too large for any single node.
-    val probe = math.min(localNodeLimit + 1, Int.MaxValue.toLong - 1).toInt
-    if (index.limit(probe).count() <= localNodeLimit) {
-      val nodes = index.select("rangeId", "dimension", "mid", "lowRangeId",
-        "highRangeId", "id").collect()
-      val bc = spark.sparkContext.broadcast(buildWalkMap(nodes, 0))
+    val local = localTree(index, localNodeLimit)
+    if (local.isDefined) {
+      val bc = spark.sparkContext.broadcast(local.get)
       return queries
         .select(col(qidCol).cast("long").as("qid"),
           col(qvecCol).cast("array<double>").as("qvec"))

@@ -168,10 +168,14 @@ object IvfPq {
 
   /** Probe an IVFADC store: read ONLY the nprobe nearest list partitions
     * (PartitionFilters on list_id), ADC-score each row against the
-    * query's residual FOR ITS OWN LIST (a when-chain over the probed
-    * lists — each list gets its own literal m×k table), take the topN by
-    * approximate distance, then fetch those vectors by keyed broadcast
-    * join and re-rank exactly. */
+    * query's residual FOR ITS OWN LIST, take the topN by approximate
+    * distance, then fetch those vectors by keyed broadcast join and
+    * re-rank exactly. The per-list m×k tables enter as ONE flat
+    * nprobe·m·k lookup-table literal beside a literal array of the probed
+    * list ids; a row's score is Σ_j lut[pos(list_id)·m·k + j·k + code_j],
+    * j ascending (the fold order of adcScore and probeBatch). Array
+    * literals are codegen references, not inlined constants, so every
+    * query reuses the same compiled code. */
   def probe(spark: SparkSession, path: String, vectors: DataFrame,
             idCol: String, vecCol: String, q: Seq[Double],
             nprobe: Int, topN: Int, k: Int): DataFrame =
@@ -181,16 +185,29 @@ object IvfPq {
     * partition re-listing, no sidecar jobs per call. */
   def probe(store: Store, vectors: DataFrame,
             idCol: String, vecCol: String, q: Seq[Double],
-            nprobe: Int, topN: Int, k: Int): DataFrame = {
+            nprobe: Int, topN: Int, k: Int): DataFrame =
+    probeWith(store, vectors, idCol, vecCol, q, q, nprobe, topN, k)
+
+  /** The single-query probe body: probe lists and ADC scores come from
+    * `scoreQ` (the query in the store's coding space), the exact re-rank
+    * from `exactQ` (the query in the vector table's space). */
+  private def probeWith(store: Store, vectors: DataFrame,
+                        idCol: String, vecCol: String,
+                        scoreQ: Seq[Double], exactQ: Seq[Double],
+                        nprobe: Int, topN: Int, k: Int): DataFrame = {
     val byList = store.centroids.toMap
-    val probeLists = Similarity.ivfProbeLists(store.centroids, q, nprobe)
-    val score = probeLists.map { lid =>
+    val probeLists = Similarity.ivfProbeLists(store.centroids, scoreQ, nprobe)
+    val lut = probeLists.toArray.flatMap { lid =>
       val c = byList(lid)
-      val qRes = q.indices.map(i => q(i) - c(i))
-      (lid, ProductQuant.adcScore(col("codes"), store.cb, qRes))
-    }.foldLeft(lit(Double.MaxValue)) { case (acc, (lid, s)) =>
-      when(col("list_id") === lid, s).otherwise(acc)
+      ProductQuant.adcTable(store.cb, scoreQ.indices.map(i => scoreQ(i) - c(i))).flatten
     }
+    val m = store.cb.length
+    val kCodes = store.cb(0).length
+    val base = (array_position(lit(probeLists.toArray), col("list_id").cast("long")) - 1)
+      .cast("int") * (m * kCodes) + 1
+    val score = (0 until m).map { j =>
+      element_at(lit(lut), base + j * kCodes + element_at(col("codes"), j + 1))
+    }.reduce(_ + _)
     val cands = store.codes
       .filter(col("list_id").isin(probeLists: _*))
       .withColumn("approx", score)
@@ -198,7 +215,7 @@ object IvfPq {
       .limit(topN)
     vectors.select(col(idCol), col(vecCol))
       .join(broadcast(cands), Seq(idCol))
-      .withColumn("dist", dist(col(vecCol), doubleVec(q)))
+      .withColumn("dist", dist(col(vecCol), doubleVec(exactQ)))
       .orderBy(col("dist"), col(idCol))
       .limit(k)
       .drop("codes", "approx")
@@ -276,30 +293,9 @@ object IvfPq {
     * against the wide vector table. */
   def probeOpq(os: OpqStore, vectors: DataFrame,
                idCol: String, vecCol: String, q: Seq[Double],
-               nprobe: Int, topN: Int, k: Int): DataFrame = {
-    val store = os.store
-    val rq = os.rotateQuery(q)
-    val byList = store.centroids.toMap
-    val probeLists = Similarity.ivfProbeLists(store.centroids, rq, nprobe)
-    val score = probeLists.map { lid =>
-      val c = byList(lid)
-      val qRes = rq.indices.map(i => rq(i) - c(i))
-      (lid, ProductQuant.adcScore(col("codes"), store.cb, qRes))
-    }.foldLeft(lit(Double.MaxValue)) { case (acc, (lid, s)) =>
-      when(col("list_id") === lid, s).otherwise(acc)
-    }
-    val cands = store.codes
-      .filter(col("list_id").isin(probeLists: _*))
-      .withColumn("approx", score)
-      .orderBy(col("approx"), col(idCol))
-      .limit(topN)
-    vectors.select(col(idCol), col(vecCol))
-      .join(broadcast(cands), Seq(idCol))
-      .withColumn("dist", dist(col(vecCol), doubleVec(q)))
-      .orderBy(col("dist"), col(idCol))
-      .limit(k)
-      .drop("codes", "approx")
-  }
+               nprobe: Int, topN: Int, k: Int): DataFrame =
+    probeWith(os.store, vectors, idCol, vecCol, os.rotateQuery(q), q,
+      nprobe, topN, k)
 
   /** [[probeBatch]] against an OPQ store — completing the
     * {single, batch} × {plain, OPQ} serving matrix: the query relation

@@ -99,18 +99,24 @@ object ProductQuant {
     * sub-distances embeds as literal arrays; a row's score is m
     * `element_at` lookups summed — no per-row float math. */
   def adcScore(codesCol: Column, cb: Codebook, q: Seq[Double]): Column = {
+    val table = adcTable(cb, q)
+    cb.indices.map { j =>
+      element_at(array(table(j).map(lit).toIndexedSeq: _*),
+        element_at(codesCol, j + 1) + 1)
+    }.reduce(_ + _)
+  }
+
+  /** The query's m×k table of exact sub-distances: entry (j, c) folds
+    * subspace j's squared differences to word c in ascending order. */
+  private[graft] def adcTable(cb: Codebook, q: Seq[Double]): Array[Array[Double]] = {
     val dsub = cb(0)(0).length
-    val table: Array[Array[Double]] = cb.zipWithIndex.map { case (words, j) =>
+    cb.zipWithIndex.map { case (words, j) =>
       words.map { w =>
         w.indices.foldLeft(0d) { (acc, i) =>
           val diff = q(j * dsub + i) - w(i); acc + diff * diff
         }
       }
     }
-    cb.indices.map { j =>
-      element_at(array(table(j).map(lit).toIndexedSeq: _*),
-        element_at(codesCol, j + 1) + 1)
-    }.reduce(_ + _)
   }
 
   /** PQ ANN top-k: ADC-rank all rows (projection + TakeOrdered topN),

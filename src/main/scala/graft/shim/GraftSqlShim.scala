@@ -14,4 +14,20 @@ object GraftSqlShim {
     * implementing ExpectsInputTypes need to NAME it in the inputTypes
     * signature — this same-package alias re-exports it. */
   type AbstractType = org.apache.spark.sql.types.AbstractDataType
+
+  /** A cache entry (`private[sql]` at the Scala level, re-exported like
+    * [[AbstractType]]). `isCachedColumnBuffersLoaded` turns false once
+    * the entry is cleared (`unpersist`). */
+  type CacheEntry = org.apache.spark.sql.execution.columnar.CachedRDDBuilder
+
+  /** The cache entry currently serving `df` (the one the session's
+    * CacheManager matches by plan), or None when `df` is not cached. A
+    * new entry is built whenever the data is (re)cached, so its identity
+    * versions the cached contents. */
+  def cacheEntry(df: DataFrame): Option[CacheEntry] = df match {
+    case ds: classic.Dataset[_] =>
+      ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+        .map(_.cachedRepresentation.cacheBuilder)
+    case _ => None
+  }
 }
