@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions.{dist, doubleVec}
+import graft.operators.PartitionedStore.{rankExact, topKPerQuery, withVectors, writeRows}
 
 /** Persisted binary-code store — the serving layout for the 1-bit
   * quantization family ([[VectorStats.binaryKnn]] is the inline form):
@@ -57,39 +57,41 @@ object BinaryIndex {
   private def bucketOf(id: Column, numBuckets: Int): Column =
     pmod(hash(id), lit(numBuckets)).cast("int")
 
+  /** Encode `vecs` to `d` bits against driver-held thresholds (a
+    * d-entry literal) and write or append the (id, code) rows to their
+    * hash buckets — the one encoder of write and append. */
+  private def writeCodes(vecs: DataFrame, idCol: String, vecCol: String,
+                         thr: Array[Double], d: Int, numBuckets: Int,
+                         mode: String, path: String): Unit =
+    writeRows(vecs.select(col(idCol),
+        VectorStats.binCode(col(vecCol), array(thr.toIndexedSeq.map(lit): _*),
+          d).as("code"),
+        bucketOf(col(idCol), numBuckets).as("bucket")), "bucket", mode, path)
+
   /** Persist the binary serving layout: (id, code) rows bucketed by
-    * hashed id, plus the per-dim threshold sidecar. One pass over the
-    * corpus; the codes write is a pure projection (no shuffle beyond
-    * the one repartition that keeps one file per bucket per task). */
+    * hashed id, plus the per-dim threshold sidecar. The thresholds are
+    * aggregated once, written as the sidecar and read back (d rows);
+    * the codes write is then a pure projection (no shuffle beyond the
+    * one repartition that keeps one file per bucket per task). */
   def write(points: DataFrame, idCol: String, vecCol: String, d: Int,
             path: String, numBuckets: Int = 64): Unit = {
-    val thrDf = VectorStats.binThreshold(points, idCol, vecCol)
-    points.crossJoin(broadcast(thrDf))
-      .select(col(idCol),
-        VectorStats.binCode(col(vecCol), col("_bthr"), d).as("code"),
-        bucketOf(col(idCol), numBuckets).as("bucket"))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    thrDf.select(posexplode(col("_bthr")).as(Seq("idx", "thr")))
-      .select(col("idx").cast("int"), col("thr").cast("double"))
-      .coalesce(1).write.mode("overwrite").parquet(path + ".thr")
+    PartitionedStore.writeSidecar(VectorStats.binThreshold(points, idCol, vecCol)
+      .select(posexplode(col("_bthr")).as(Seq("idx", "thr")))
+      .select(col("idx").cast("int"), col("thr").cast("double")), path, ".thr")
+    writeCodes(points, idCol, vecCol, readThr(points.sparkSession, path), d,
+      numBuckets, "overwrite", path)
   }
 
   /** INCREMENTAL append: encode new vectors with the store's FROZEN
     * threshold sidecar (the quantizer never re-trains on append — a
     * drifted corpus warrants a rewrite) and land them in their hash
-    * buckets. Trivially parallel; no read of existing rows. */
+    * buckets. Trivially parallel; reads the sidecar only — no listing
+    * or read of existing rows. */
   def append(spark: SparkSession, path: String, newVecs: DataFrame,
              idCol: String, vecCol: String, numBuckets: Int = 64): Unit = {
-    val st = open(spark, path)
-    val d = st.thr.length
-    val thrLit = array(st.thr.toIndexedSeq.map(lit): _*)
-    newVecs
-      .select(col(idCol),
-        VectorStats.binCode(col(vecCol), thrLit, d).as("code"),
-        bucketOf(col(idCol), numBuckets).as("bucket"))
-      .repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(path)
+    val thr = readThr(spark, path)
+    writeCodes(newVecs, idCol, vecCol, thr, thr.length, numBuckets,
+      "append", path)
   }
 
   /** Removal: the shared partition-level batch delete — rewrites only
@@ -100,11 +102,13 @@ object BinaryIndex {
 
   /** Open a persisted binary store once: one file listing, one sidecar
     * read. */
-  def open(spark: SparkSession, path: String): Store = {
-    val thr = spark.read.parquet(path + ".thr")
+  def open(spark: SparkSession, path: String): Store =
+    Store(spark.read.parquet(path), readThr(spark, path))
+
+  /** The store's frozen per-dim thresholds, from the `.thr` sidecar. */
+  private def readThr(spark: SparkSession, path: String): Array[Double] =
+    spark.read.parquet(path + ".thr")
       .collect().sortBy(_.getInt(0)).map(_.getDouble(1))
-    Store(spark.read.parquet(path), thr)
-  }
 
   /** Probe: rank the codes scan by Hamming distance to the
     * driver-encoded query, keep the top `rerank` pool deterministically
@@ -120,11 +124,7 @@ object BinaryIndex {
       .orderBy(col("ham"), col(idCol))
       .limit(math.max(rerank, k))
       .select(col(idCol), col("ham"))
-    points.select(col(idCol), col(vecCol))
-      .join(broadcast(pool), Seq(idCol))
-      .withColumn("dist", dist(col(vecCol), doubleVec(q)))
-      .orderBy(col("dist"), col(idCol))
-      .limit(k)
+    rankExact(withVectors(points, idCol, vecCol, pool), idCol, vecCol, q, k)
       .select(col(idCol), col("ham"), col("dist"))
   }
 
@@ -141,7 +141,6 @@ object BinaryIndex {
   def probeBatch(store: Store, points: DataFrame, idCol: String,
                  vecCol: String, queries: DataFrame, qIdCol: String,
                  qVecCol: String, k: Int, rerank: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val d = store.thr.length
     val thrLit = array(store.thr.toIndexedSeq.map(lit): _*)
     val qv = queries.select(col(qIdCol).as("qid"), col(qVecCol).as("qv"))
@@ -152,20 +151,14 @@ object BinaryIndex {
     val qs = qv
       .withColumn("qcode", VectorStats.binCode(col("qv"), thrLit, d))
       .select(col("qid"), col("qcode"))
-    val pool = store.codes
-      .crossJoin(broadcast(qs))
-      .select(col("qid"), col(idCol),
-        hamming(col("code"), col("qcode")).as("ham"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("ham"), col(idCol))))
-      .filter(col("rn") <= math.max(rerank, k))
+    val pool = topKPerQuery(store.codes
+        .crossJoin(broadcast(qs))
+        .select(col("qid"), col(idCol),
+          hamming(col("code"), col("qcode")).as("ham")),
+        math.max(rerank, k), col("ham"), col(idCol))
       .select(col("qid"), col(idCol), col("ham"))
-    pool.join(points.select(col(idCol), col(vecCol)), Seq(idCol))
-      .join(broadcast(qv), Seq("qid"))
-      .withColumn("dist", dist(col(vecCol), col("qv")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dist"), col(idCol))))
-      .filter(col("rn") <= k)
+    rankExact(pool.join(points.select(col(idCol), col(vecCol)), Seq(idCol))
+        .join(broadcast(qv), Seq("qid")), idCol, vecCol, k)
       .select(col("qid"), col(idCol), col("ham"), col("dist"))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.{dist, doubleVec}
+import graft.operators.PartitionedStore.{rankExact, topKPerQuery, withVectors, writeRows}
 import graft.operators.ProductQuant.Codebook
 
 /** IVF-PQ (IVFADC): the standard composition of the IVF coarse quantizer
@@ -83,7 +84,7 @@ object IvfPq {
   /** Persist the IVFADC serving layout: narrow (id, codes) rows
     * partitioned by list_id, with the centroid set and codebook as
     * KB-sized sidecar tables (mirrors writeIvf/writePq). Returns the
-    * trained (centroids, codebook). */
+    * trained (centroids, codebook). Layout rules: [[PartitionedStore]]. */
   def write(emb: DataFrame, idCol: String, vecCol: String,
             numLists: Int, coarseIters: Int, m: Int, k: Int, pqIters: Int,
             path: String,
@@ -95,22 +96,12 @@ object IvfPq {
         (v, c) => Similarity.ivfListIdRouted(v, c, routeSpark = Some(spark))
       else Similarity.ivfListId)
     val cb = trainResidual(emb, idCol, vecCol, centroids, m, k, pqIters, routed)
-    assign(emb, vecCol, centroids, cb, routed = routed)
-      .select(col(idCol), col("list_id"), col("codes"))
-      // cluster rows into their target partition before the partitioned
-      // write: without this every upstream task writes a file into EVERY
-      // list dir — shuffle.partitions × numLists files (131k at C=4096,
-      // measured: a 5-minute write and multi-second probes from file
-      // listing alone). After: one file per list per owning task.
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(path)
-    centroids.map { case (lid, cv) => (lid, cv.toSeq) }.toSeq
-      .toDF("list_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(path + ".centroids")
-    cb.zipWithIndex.flatMap { case (words, j) =>
+    writeRows(assign(emb, vecCol, centroids, cb, routed = routed)
+      .select(col(idCol), col("list_id"), col("codes")), "list_id", "overwrite", path)
+    PartitionedStore.writeCentroids(spark, centroids, path)
+    PartitionedStore.writeSidecar(cb.zipWithIndex.flatMap { case (words, j) =>
       words.zipWithIndex.map { case (w, c) => (j, c, w.toSeq) }
-    }.toSeq.toDF("j", "code", "word")
-      .coalesce(1).write.mode("overwrite").parquet(path + ".codebook")
+    }.toSeq.toDF("j", "code", "word"), path, ".codebook")
     (centroids, cb)
   }
 
@@ -135,16 +126,8 @@ object IvfPq {
   /** Open a persisted IVFADC store once: one partition listing, one
     * read of each sidecar. */
   def open(spark: SparkSession, path: String): Store =
-    Store(spark.read.parquet(path), readCentroids(spark, path),
+    Store(spark.read.parquet(path), PartitionedStore.readCentroids(spark, path),
       readCodebook(spark, path))
-
-  /** The store's frozen coarse-centroid set, from its sidecar. */
-  def readCentroids(spark: SparkSession,
-                    path: String): Array[(Long, Array[Double])] =
-    spark.read.parquet(path + ".centroids")
-      .select(col("list_id").cast("long"), col("centroid"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
 
   /** The store's frozen residual codebook, from its sidecar. */
   def readCodebook(spark: SparkSession, path: String): Codebook =
@@ -162,9 +145,9 @@ object IvfPq {
     * touched partitions gain files; probes see old ∪ new rows. */
   def append(spark: SparkSession, path: String, newVecs: DataFrame,
              idCol: String, vecCol: String): Unit =
-    assign(newVecs, vecCol, readCentroids(spark, path), readCodebook(spark, path))
-      .select(col(idCol), col("list_id"), col("codes"))
-      .write.mode("append").partitionBy("list_id").parquet(path)
+    writeRows(assign(newVecs, vecCol, PartitionedStore.readCentroids(spark, path),
+        readCodebook(spark, path))
+      .select(col(idCol), col("list_id"), col("codes")), "list_id", "append", path)
 
   /** Probe an IVFADC store: read ONLY the nprobe nearest list partitions
     * (PartitionFilters on list_id), ADC-score each row against the
@@ -213,11 +196,7 @@ object IvfPq {
       .withColumn("approx", score)
       .orderBy(col("approx"), col(idCol))
       .limit(topN)
-    vectors.select(col(idCol), col(vecCol))
-      .join(broadcast(cands), Seq(idCol))
-      .withColumn("dist", dist(col(vecCol), doubleVec(exactQ)))
-      .orderBy(col("dist"), col(idCol))
-      .limit(k)
+    rankExact(withVectors(vectors, idCol, vecCol, cands), idCol, vecCol, exactQ, k)
       .drop("codes", "approx")
   }
 
@@ -257,33 +236,39 @@ object IvfPq {
       ProductQuant.opqRotateCol(pc, perm, col(vecCol)))
     val out = write(rotated, idCol, "_rotv", numLists, coarseIters,
       m, k, pqIters, path)
-    pc.zipWithIndex.map { case (row, i) => (i, row.toSeq, perm(i)) }.toSeq
-      .toDF("i", "prow", "permi")
-      .coalesce(1).write.mode("overwrite").parquet(path + ".opq")
+    PartitionedStore.writeSidecar(
+      pc.zipWithIndex.map { case (row, i) => (i, row.toSeq, perm(i)) }.toSeq
+        .toDF("i", "prow", "permi"), path, ".opq")
     out
+  }
+
+  /** The store's frozen rotation (components, permutation), from its
+    * `.opq` sidecar. */
+  private def readRotation(spark: SparkSession,
+                           path: String): (Array[Array[Double]], Array[Int]) = {
+    val rows = spark.read.parquet(path + ".opq")
+      .select(col("i"), col("prow"), col("permi"))
+      .collect().sortBy(_.getInt(0))
+    (rows.map(_.getSeq[Double](1).toArray), rows.map(_.getInt(2)))
   }
 
   /** Open a persisted OPQ-IVFADC store once (plain open + one rotation
     * sidecar read). */
   def openOpq(spark: SparkSession, path: String): OpqStore = {
-    val rows = spark.read.parquet(path + ".opq")
-      .select(col("i"), col("prow"), col("permi"))
-      .collect().sortBy(_.getInt(0))
-    OpqStore(open(spark, path),
-      rows.map(_.getSeq[Double](1).toArray),
-      rows.map(_.getInt(2)))
+    val (pc, perm) = readRotation(spark, path)
+    OpqStore(open(spark, path), pc, perm)
   }
 
   /** INCREMENTAL maintenance of an OPQ store: rotate the new vectors
     * with the frozen sidecar rotation, then the plain frozen-quantizer
     * [[append]] — identical codes to a write-time encode of the same
-    * rows (the rotation column is the same arithmetic on both paths). */
+    * rows (the rotation column is the same arithmetic on both paths).
+    * Reads each of the three sidecars once and never lists the store. */
   def appendOpq(spark: SparkSession, path: String, newVecs: DataFrame,
                 idCol: String, vecCol: String): Unit = {
-    val os = openOpq(spark, path)
+    val (pc, perm) = readRotation(spark, path)
     append(spark, path,
-      newVecs.withColumn("_rotv",
-        ProductQuant.opqRotateCol(os.pc, os.perm, col(vecCol))),
+      newVecs.withColumn("_rotv", ProductQuant.opqRotateCol(pc, perm, col(vecCol))),
       idCol, "_rotv")
   }
 
@@ -302,65 +287,15 @@ object IvfPq {
     * is rotated ONCE as a codegen projection (the same rotation column
     * encode used), probe-list selection + per-(qid, list) ADC LUTs run
     * in rotated space, and the exact re-rank joins the original-space
-    * vector table with the ORIGINAL query vectors. Plan shape identical
-    * to probeBatch (pruned codes scan, broadcast LUT rows, window
-    * top-k). */
+    * vector table with the ORIGINAL query vectors. Same body as
+    * probeBatch (pruned codes scan, broadcast LUT rows, window top-k). */
   def probeBatchOpq(os: OpqStore, vectors: DataFrame,
                     idCol: String, vecCol: String,
                     queries: DataFrame, qIdCol: String, qVecCol: String,
-                    nprobe: Int, topN: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val store = os.store
-    val cb: Codebook = store.cb
-    val m = cb.length
-    val kCodes = cb(0).length
-    val dsub = cb(0)(0).length
-    val cbFlat = array(cb.flatten.flatten.map(lit).toIndexedSeq: _*)
-    val centRel = store.centRel
-      .select(col("list_id").cast("long"),
-        col("cv").cast("array<double>").as("cv"))
-    val qProbe = queries
-      .select(col(qIdCol).cast("long").as("qid"),
-        col(qVecCol).cast("array<double>").as("qv"),
-        ProductQuant.opqRotateCol(os.pc, os.perm, col(qVecCol))
-          .cast("array<double>").as("rqv"))
-      .crossJoin(broadcast(centRel))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("qid"))
-        .orderBy(dist(col("rqv"), col("cv")), col("list_id"))))
-      .filter(col("rn") <= nprobe)
-      .withColumn("qres", zip_with(col("rqv"), col("cv"), (a, b) => a - b))
-      .withColumn("lut", flatten(
-        transform(sequence(lit(0), lit(m - 1)), j =>
-          transform(sequence(lit(0), lit(kCodes - 1)), c =>
-            aggregate(sequence(lit(0), lit(dsub - 1)), lit(0.0d),
-              (acc, s) => {
-                val d = element_at(col("qres"), j * dsub + s + 1) -
-                  element_at(cbFlat, (j * kCodes + c) * dsub + s + 1)
-                acc + d * d
-              })))))
-      .select(col("qid"), col("qv"), col("list_id"), col("lut"))
-      .localCheckpoint()
-    val lists = qProbe.select("list_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val approx = (0 until m).map { j =>
-      element_at(col("lut"), lit(j * kCodes) + element_at(col("codes"), j + 1) + 1)
-    }.reduce(_ + _)
-    val cands = store.codes
-      .filter(col("list_id").isin(lists: _*))
-      .join(broadcast(qProbe), Seq("list_id"))
-      .withColumn("approx", approx)
-      .withColumn("rn", row_number().over(Window.partitionBy(col("qid"))
-        .orderBy(col("approx"), col(idCol))))
-      .filter(col("rn") <= topN)
-      .select(col("qid"), col("qv"), col(idCol), col("approx"))
-    vectors.select(col(idCol), col(vecCol))
-      .join(broadcast(cands), Seq(idCol))
-      .withColumn("dist", dist(col(vecCol), col("qv")))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("qid"))
-        .orderBy(col("dist"), col(idCol))))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col(idCol), col("dist"))
-  }
+                    nprobe: Int, topN: Int, k: Int): DataFrame =
+    probeBatchWith(os.store, vectors, idCol, vecCol, queries, qIdCol, qVecCol,
+      Some(ProductQuant.opqRotateCol(os.pc, os.perm, col(qVecCol))),
+      nprobe, topN, k)
 
   /** BATCH ADC kNN JOIN over the persisted IVFADC store — the a6 shape
     * for the PQ path: a query RELATION is served in one wave against
@@ -402,8 +337,19 @@ object IvfPq {
   def probeBatch(store: Store, vectors: DataFrame,
                  idCol: String, vecCol: String,
                  queries: DataFrame, qIdCol: String, qVecCol: String,
-                 nprobe: Int, topN: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+                 nprobe: Int, topN: Int, k: Int): DataFrame =
+    probeBatchWith(store, vectors, idCol, vecCol, queries, qIdCol, qVecCol,
+      None, nprobe, topN, k)
+
+  /** The ADC batch body. `rotated` is the query relation's vector in
+    * the store's coding space (the OPQ rotation), carried as `rqv`;
+    * without it `qv` itself selects probe lists and builds the LUTs.
+    * The exact re-rank always uses the original `qv`. */
+  private def probeBatchWith(store: Store, vectors: DataFrame,
+                             idCol: String, vecCol: String,
+                             queries: DataFrame, qIdCol: String, qVecCol: String,
+                             rotated: Option[Column],
+                             nprobe: Int, topN: Int, k: Int): DataFrame = {
     val cb: Codebook = store.cb
     val m = cb.length
     val kCodes = cb(0).length
@@ -413,14 +359,13 @@ object IvfPq {
     val centRel = store.centRel
       .select(col("list_id").cast("long"),
         col("cv").cast("array<double>").as("cv"))
-    val qProbe = queries
-      .select(col(qIdCol).cast("long").as("qid"),
-        col(qVecCol).cast("array<double>").as("qv"))
-      .crossJoin(broadcast(centRel))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("qid"))
-        .orderBy(dist(col("qv"), col("cv")), col("list_id"))))
-      .filter(col("rn") <= nprobe)
-      .withColumn("qres", zip_with(col("qv"), col("cv"), (a, b) => a - b))
+    val sq = if (rotated.isDefined) "rqv" else "qv"
+    val qs = queries.select((Seq(col(qIdCol).cast("long").as("qid"),
+      col(qVecCol).cast("array<double>").as("qv")) ++
+      rotated.map(_.cast("array<double>").as("rqv"))): _*)
+    val qProbe = topKPerQuery(qs.crossJoin(broadcast(centRel)), nprobe,
+        dist(col(sq), col("cv")), col("list_id"))
+      .withColumn("qres", zip_with(col(sq), col("cv"), (a, b) => a - b))
       .withColumn("lut", flatten(
         transform(sequence(lit(0), lit(m - 1)), j =>
           transform(sequence(lit(0), lit(kCodes - 1)), c =>
@@ -431,27 +376,15 @@ object IvfPq {
                 acc + d * d
               })))))
       .select(col("qid"), col("qv"), col("list_id"), col("lut"))
-      .localCheckpoint()
-    // the touched-list union prunes the codes read at partition level
-    val lists = qProbe.select("list_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
     val approx = (0 until m).map { j =>
       element_at(col("lut"), lit(j * kCodes) + element_at(col("codes"), j + 1) + 1)
     }.reduce(_ + _)
-    val cands = store.codes
-      .filter(col("list_id").isin(lists: _*))
-      .join(broadcast(qProbe), Seq("list_id"))
-      .withColumn("approx", approx)
-      .withColumn("rn", row_number().over(Window.partitionBy(col("qid"))
-        .orderBy(col("approx"), col(idCol))))
-      .filter(col("rn") <= topN)
+    val cands = topKPerQuery(
+        PartitionedStore.probedJoin(store.codes, qProbe, "list_id")
+          .withColumn("approx", approx),
+        topN, col("approx"), col(idCol))
       .select(col("qid"), col("qv"), col(idCol), col("approx"))
-    vectors.select(col(idCol), col(vecCol))
-      .join(broadcast(cands), Seq(idCol))
-      .withColumn("dist", dist(col(vecCol), col("qv")))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("qid"))
-        .orderBy(col("dist"), col(idCol))))
-      .filter(col("rn") <= k)
+    rankExact(withVectors(vectors, idCol, vecCol, cands), idCol, vecCol, k)
       .select(col("qid"), col(idCol), col("dist"))
   }
 }

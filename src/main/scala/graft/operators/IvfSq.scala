@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.{dist, doubleVec}
+import graft.operators.PartitionedStore.{rankExact, topKPerQuery, withVectors, writeRows}
 
 /** IVF + SQ8: the inverted-file coarse quantizer over SCALAR-quantized
   * (int8-per-dim) storage — faiss's IVF/SQ workhorse layout (public
@@ -51,16 +52,33 @@ object IvfSq {
           (c.cast("double") + lit(0.5d)) * element_at(extsL, i + 1) / levels))
   }
 
+  /** SQ8 encode of a vector column against driver-held extents — the
+    * one encoder of write and append, op for op
+    * [[VectorStats.sqCode]]: floor((x − min_i)/ext_i·levels) clamped to
+    * levels−1, constant dims (ext 0) encode to 0. */
+  private def encodeCol(vec: Column, mins: Array[Double],
+                        exts: Array[Double], levels: Int): Column = {
+    val minsL = array(mins.map(lit).toIndexedSeq: _*)
+    val extsL = array(exts.map(lit).toIndexedSeq: _*)
+    transform(vec, (x, i) =>
+      least(
+        floor(when(element_at(extsL, i + 1) === 0d, lit(0.0d))
+          .otherwise((x.cast("double") - element_at(minsL, i + 1)) /
+            element_at(extsL, i + 1) * levels)).cast("int"),
+        lit(levels - 1)))
+  }
+
   /** Persist the IVF-SQ8 serving layout: narrow (id, codes) rows
     * partitioned by list_id, with the coarse-centroid set and the
     * per-dim quantization extent as KB-sized sidecars. Centroids are
     * the deterministic first-numLists seed refined `coarseIters` Lloyd
-    * rounds (0 = exact oracle-replayable assignment). */
+    * rounds (0 = exact oracle-replayable assignment). The extent is
+    * aggregated once, written as its sidecar, and read back (d rows) to
+    * encode the corpus exactly as [[append]] encodes. */
   def write(emb: DataFrame, idCol: String, vecCol: String,
             numLists: Int, coarseIters: Int, path: String,
             levels: Int = 256, routed: Boolean = false): Unit = {
     val spark = emb.sparkSession
-    import spark.implicits._
     // routed: the O(√C) two-level coarse kernel for corpus-scale C
     // (same trade as IvfPq.write — see listIdCol there)
     val assignFn: (Column, Array[(Long, Array[Double])]) => Column =
@@ -68,59 +86,54 @@ object IvfSq {
       else Similarity.ivfListId
     val centroids =
       Similarity.ivfTrain(emb, idCol, vecCol, numLists, coarseIters, assignFn)
-    emb.crossJoin(broadcast(VectorStats.sqExtent(emb, idCol, vecCol)))
-      .withColumn("list_id", assignFn(col(vecCol), centroids))
-      .withColumn("codes", VectorStats.sqCode(col(vecCol), levels))
-      .select(col(idCol), col("list_id"), col("codes"))
-      // one file per list per owning task (see IvfPq.write's note)
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(path)
-    centroids.map { case (lid, cv) => (lid, cv.toSeq) }.toSeq
-      .toDF("list_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(path + ".centroids")
     // extent sidecar: one row per dim (idx, mn, ex) + the level count
-    VectorStats.sqExtent(emb, idCol, vecCol)
+    PartitionedStore.writeSidecar(VectorStats.sqExtent(emb, idCol, vecCol)
       .select(explode(map_entries(col("_qmins"))).as("m"), col("_qexts"))
       .select(col("m.key").as("idx"), col("m.value").as("mn"),
         element_at(col("_qexts"), col("m.key")).as("ex"),
-        lit(levels).as("levels"))
-      .coalesce(1).write.mode("overwrite").parquet(path + ".extent")
+        lit(levels).as("levels")), path, ".extent")
+    val (mins, exts, _) = readExtent(spark, path)
+    writeRows(emb.select(col(idCol),
+        assignFn(col(vecCol), centroids).as("list_id"),
+        encodeCol(col(vecCol), mins, exts, levels).as("codes")),
+      "list_id", "overwrite", path)
+    PartitionedStore.writeCentroids(spark, centroids, path)
+  }
+
+  /** The `.extent` sidecar: per-dim mins and extents in dim order, and
+    * the level count. */
+  private def readExtent(spark: SparkSession,
+                         path: String): (Array[Double], Array[Double], Int) = {
+    val ext = spark.read.parquet(path + ".extent")
+      .select(col("idx").cast("int"), col("mn").cast("double"),
+        col("ex").cast("double"), col("levels").cast("int"))
+      .collect().sortBy(_.getInt(0))
+    (ext.map(_.getDouble(1)), ext.map(_.getDouble(2)), ext.head.getInt(3))
   }
 
   /** Open a persisted IVF-SQ8 store once: one partition listing, one
     * read of each sidecar. */
   def open(spark: SparkSession, path: String): Store = {
-    val ext = spark.read.parquet(path + ".extent")
-      .select(col("idx").cast("int"), col("mn").cast("double"),
-        col("ex").cast("double"), col("levels").cast("int"))
-      .collect().sortBy(_.getInt(0))
-    Store(spark.read.parquet(path),
-      Similarity.readIvfCentroids(spark, path),
-      ext.map(_.getDouble(1)), ext.map(_.getDouble(2)),
-      ext.head.getInt(3))
+    val (mins, exts, levels) = readExtent(spark, path)
+    Store(spark.read.parquet(path), PartitionedStore.readCentroids(spark, path),
+      mins, exts, levels)
   }
 
   /** INCREMENTAL maintenance: encode new vectors with the store's OWN
     * frozen centroid + extent sidecars and append to their list
     * partitions (the quantizer and extent are frozen — re-training is
-    * a rewrite). Removal is [[StoreMaintain.removeFromStore]],
+    * a rewrite). Reads those two sidecars only; the store itself is
+    * never listed. Removal is [[StoreMaintain.removeFromStore]],
     * unchanged — the layout is the same list_id-partitioned narrow
     * table as the IVF-flat store. */
   def append(spark: SparkSession, path: String, newVecs: DataFrame,
              idCol: String, vecCol: String): Unit = {
-    val st = open(spark, path)
-    val minsL = array(st.mins.map(lit).toIndexedSeq: _*)
-    val extsL = array(st.exts.map(lit).toIndexedSeq: _*)
-    newVecs
-      .withColumn("list_id", Similarity.ivfListId(col(vecCol), st.centroids))
-      .withColumn("codes", transform(col(vecCol), (x, i) =>
-        least(
-          floor(when(element_at(extsL, i + 1) === 0d, lit(0.0d))
-            .otherwise((x.cast("double") - element_at(minsL, i + 1)) /
-              element_at(extsL, i + 1) * st.levels)).cast("int"),
-          lit(st.levels - 1))))
-      .select(col(idCol), col("list_id"), col("codes"))
-      .write.mode("append").partitionBy("list_id").parquet(path)
+    val (mins, exts, levels) = readExtent(spark, path)
+    writeRows(newVecs.select(col(idCol),
+        Similarity.ivfListId(col(vecCol), PartitionedStore.readCentroids(spark, path))
+          .as("list_id"),
+        encodeCol(col(vecCol), mins, exts, levels).as("codes")),
+      "list_id", "append", path)
   }
 
   /** Probe: read ONLY the nprobe nearest list partitions, rank by
@@ -138,11 +151,7 @@ object IvfSq {
           doubleVec(q)))
       .orderBy(col("sq_dist"), col(idCol))
       .limit(topN)
-    vectors.select(col(idCol), col(vecCol))
-      .join(broadcast(cands), Seq(idCol))
-      .withColumn("dist", dist(col(vecCol), doubleVec(q)))
-      .orderBy(col("dist"), col(idCol))
-      .limit(k)
+    rankExact(withVectors(vectors, idCol, vecCol, cands), idCol, vecCol, q, k)
       .drop("codes", "sq_dist")
   }
 
@@ -166,30 +175,18 @@ object IvfSq {
                  idCol: String, vecCol: String,
                  queries: DataFrame, qIdCol: String, qVecCol: String,
                  nprobe: Int, topN: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = store.codes.sparkSession
-    val centRel = Similarity.centroidRelation(spark, store.centroids)
+    val centRel = Similarity.centroidRelation(store.codes.sparkSession,
+      store.centroids)
     val qProbe = Similarity.probeListsJoin(queries, qIdCol, qVecCol,
-      centRel, nprobe).localCheckpoint()
-    // the touched-list union prunes the codes read at partition level
-    val lists = qProbe.select("list_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val cands = store.codes
-      .filter(col("list_id").isin(lists: _*))
-      .join(broadcast(qProbe), Seq("list_id"))
-      .withColumn("sq_dist",
-        dist(decodeCol(col("codes"), store.mins, store.exts, store.levels),
-          col("qv")))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("qid"))
-        .orderBy(col("sq_dist"), col(idCol))))
-      .filter(col("rn") <= topN)
+      centRel, nprobe)
+    val cands = topKPerQuery(
+        PartitionedStore.probedJoin(store.codes, qProbe, "list_id")
+          .withColumn("sq_dist",
+            dist(decodeCol(col("codes"), store.mins, store.exts, store.levels),
+              col("qv"))),
+        topN, col("sq_dist"), col(idCol))
       .select(col("qid"), col("qv"), col(idCol))
-    vectors.select(col(idCol), col(vecCol))
-      .join(broadcast(cands), Seq(idCol))
-      .withColumn("dist", dist(col(vecCol), col("qv")))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("qid"))
-        .orderBy(col("dist"), col(idCol))))
-      .filter(col("rn") <= k)
+    rankExact(withVectors(vectors, idCol, vecCol, cands), idCol, vecCol, k)
       .select(col("qid"), col(idCol), col("dist"))
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
+import graft.operators.PartitionedStore.{rankExact, topKPerQuery, writeRows}
 
 /** Approximate-nearest-neighbour search over embedding columns.
   *
@@ -66,18 +67,14 @@ object Similarity {
     val pooled = emb
       .select(col(idCol), col(vecCol), rpDist.as("rp_dist"))
       .orderBy(col("rp_dist").asc_nulls_last, col(idCol)).limit(pool)
-    pooled
-      .withColumn("dist", dist(col(vecCol), doubleVec(q)))
-      .orderBy(col("dist").asc_nulls_last, col(idCol)).limit(k)
+    rankExact(pooled, idCol, vecCol, q, k)
       .select(row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy(col("dist").asc_nulls_last, col(idCol))).as("rank"),
         col(idCol))
   }
 
   /* Ranking convention: every distance ordering in this file is
-   `asc_nulls_last` — a null/length-mismatched vector yields dist = NULL,
-   and Spark's default ascending sort is NULLS FIRST, which would seat
-   such rows AHEAD of every real neighbor in the top-k. */
+   `asc_nulls_last` — see [[PartitionedStore]]. */
 
   /** Sign-bit bucket id of a vector column for the given planes:
     * bit j set ⇔ dot(v, plane_j) > 0. */
@@ -110,11 +107,8 @@ object Similarity {
   def lshKnn(emb: DataFrame, idCol: String, vecCol: String,
              planes: Array[Array[Double]], q: Seq[Double], k: Int): DataFrame = {
     val qBucket = queryBucket(planes, q)
-    lshAssign(emb, idCol, vecCol, planes)
-      .filter(col("bucket") === qBucket)
-      .withColumn("dist", dist(col(vecCol), doubleVec(q)))
-      .orderBy(col("dist").asc_nulls_last, col(idCol))
-      .limit(k)
+    rankExact(lshAssign(emb, idCol, vecCol, planes)
+      .filter(col("bucket") === qBucket), idCol, vecCol, q, k)
   }
 
   /** Batch LSH kNN JOIN — the bucket-path twin of [[ivfKnnJoin]]: every
@@ -126,19 +120,10 @@ object Similarity {
     * (qid, id, bucket, dist). */
   def lshKnnJoin(emb: DataFrame, idCol: String, vecCol: String,
                  queries: DataFrame, qIdCol: String, qVecCol: String,
-                 planes: Array[Array[Double]], k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qB = queries
-      .select(col(qIdCol).cast("long").as("qid"), col(qVecCol).as("qv"))
-      .withColumn("bucket", lshBucket(col("qv"), planes))
-    lshAssign(emb, idCol, vecCol, planes)
-      .join(broadcast(qB), Seq("bucket"))
-      .withColumn("dist", dist(col(vecCol), col("qv")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dist").asc_nulls_last, col(idCol))))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col(idCol), col("bucket"), col("dist"))
-  }
+                 planes: Array[Array[Double]], k: Int): DataFrame =
+    lshJoin(emb, idCol, vecCol,
+      queryBuckets(queries, qIdCol, qVecCol, planes, multiProbe = false),
+      planes, k)
 
   /** MULTI-PROBE batch LSH kNN JOIN — [[lshKnnJoin]] with each query
     * also probing every bucket at hamming distance 1 from its own (one
@@ -151,26 +136,41 @@ object Similarity {
     * Returns (qid, id, bucket, dist) — bucket is the STORE row's. */
   def lshKnnJoinMulti(emb: DataFrame, idCol: String, vecCol: String,
                       queries: DataFrame, qIdCol: String, qVecCol: String,
-                      planes: Array[Array[Double]], k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // materialize the bucket hash ONCE per query row: embedding the
-    // full P-dot expression in all P+1 array slots would re-evaluate it
-    // per slot inside GenerateExec (no subexpression elimination there)
-    val probed = array((col("_b0") +: planes.indices.map(j =>
-      col("_b0").bitwiseXOR(lit(1 << j)))): _*)
-    val qB = queries
+                      planes: Array[Array[Double]], k: Int): DataFrame =
+    lshJoin(emb, idCol, vecCol,
+      queryBuckets(queries, qIdCol, qVecCol, planes, multiProbe = true),
+      planes, k)
+
+  /** The probed buckets of every query row as (qid, qv, bucket): its own
+    * sign-bit bucket, plus — `multiProbe` — the numPlanes buckets at
+    * hamming distance 1. */
+  private def queryBuckets(queries: DataFrame, qIdCol: String, qVecCol: String,
+                           planes: Array[Array[Double]],
+                           multiProbe: Boolean): DataFrame = {
+    val qs = queries
       .select(col(qIdCol).cast("long").as("qid"), col(qVecCol).as("qv"))
-      .withColumn("_b0", lshBucket(col("qv"), planes))
-      .withColumn("bucket", explode(probed))
-      .drop("_b0")
-    lshAssign(emb, idCol, vecCol, planes)
-      .join(broadcast(qB), Seq("bucket"))
-      .withColumn("dist", dist(col(vecCol), col("qv")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dist").asc_nulls_last, col(idCol))))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col(idCol), col("bucket"), col("dist"))
+    if (!multiProbe) qs.withColumn("bucket", lshBucket(col("qv"), planes))
+    else {
+      // materialize the bucket hash ONCE per query row: embedding the
+      // full P-dot expression in all P+1 array slots would re-evaluate
+      // it per slot inside GenerateExec (no subexpression elimination)
+      val probed = array((col("_b0") +: planes.indices.map(j =>
+        col("_b0").bitwiseXOR(lit(1 << j)))): _*)
+      qs.withColumn("_b0", lshBucket(col("qv"), planes))
+        .withColumn("bucket", explode(probed))
+        .drop("_b0")
+    }
   }
+
+  /** Batch LSH body over an unpartitioned frame: one map-only assignment
+    * scan joined broadcast to the probed (qid, bucket) rows, exact
+    * per-query top-k. Returns (qid, id, bucket, dist). */
+  private def lshJoin(emb: DataFrame, idCol: String, vecCol: String,
+                      qB: DataFrame, planes: Array[Array[Double]],
+                      k: Int): DataFrame =
+    rankExact(lshAssign(emb, idCol, vecCol, planes)
+        .join(broadcast(qB), Seq("bucket")), idCol, vecCol, k)
+      .select(col("qid"), col(idCol), col("bucket"), col("dist"))
 
   /** The deterministic coarse-centroid set shared by assignment and
     * probing: the `numLists` vectors with the smallest ids (a Lloyd
@@ -268,20 +268,16 @@ object Similarity {
     * persisted as a KB-sized sidecar (mirroring writeIvf's centroid
     * sidecar) so incremental maintenance ([[appendBucketed]],
     * [[StoreMaintain.removeFromStore]]) and probes can recover the
-    * frozen hash family from the store alone. */
+    * frozen hash family from the store alone. Layout rules:
+    * [[PartitionedStore]]. */
   def writeBucketed(emb: DataFrame, idCol: String, vecCol: String,
                     planes: Array[Array[Double]], path: String): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
-    lshAssign(emb, idCol, vecCol, planes)
-      // cluster rows into their target bucket first: otherwise every
-      // upstream task writes into every bucket dir — shuffle.partitions
-      // × 2^numPlanes files (see IvfPq.write's measured note)
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    planes.zipWithIndex.map { case (p, i) => (i, p.toSeq) }.toSeq
-      .toDF("plane_id", "components")
-      .coalesce(1).write.mode("overwrite").parquet(path + ".planes")
+    writeRows(lshAssign(emb, idCol, vecCol, planes), "bucket", "overwrite", path)
+    PartitionedStore.writeSidecar(
+      planes.zipWithIndex.map { case (p, i) => (i, p.toSeq) }.toSeq
+        .toDF("plane_id", "components"), path, ".planes")
   }
 
   /** The store's frozen hyperplane family, from its sidecar. */
@@ -297,14 +293,12 @@ object Similarity {
     * frozen plane sidecar and APPEND them to their bucket partitions.
     * Only touched partitions gain files; existing files are never
     * rewritten; probes see old ∪ new rows. `newVecs` must carry the
-    * same data columns as the frame [[writeBucketed]] persisted. */
+    * same data columns as the frame [[writeBucketed]] persisted.
+    * Layout rules: [[PartitionedStore]]. */
   def appendBucketed(spark: org.apache.spark.sql.SparkSession, path: String,
                      newVecs: DataFrame, idCol: String, vecCol: String): Unit =
-    lshAssign(newVecs, idCol, vecCol, readPlanes(spark, path))
-      // cluster into target buckets first — writeBucketed's documented
-      // guard against shuffle.partitions x 2^P files per append
-      .repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(path)
+    writeRows(lshAssign(newVecs, idCol, vecCol, readPlanes(spark, path)),
+      "bucket", "append", path)
 
   /** A pre-opened bucketed-LSH serving handle: the store DataFrame (its
     * partition file index is built once, at open — `spark.read.parquet`
@@ -326,11 +320,8 @@ object Similarity {
   private def probeBuckets(store: BucketedStore,
                            idCol: String, vecCol: String, buckets: Seq[Int],
                            q: Seq[Double], k: Int): DataFrame =
-    store.rows
-      .filter(col("bucket").isin(buckets: _*))
-      .withColumn("dist", dist(col(vecCol), doubleVec(q)))
-      .orderBy(col("dist").asc_nulls_last, col(idCol))
-      .limit(k)
+    rankExact(store.rows.filter(col("bucket").isin(buckets: _*)),
+      idCol, vecCol, q, k)
 
   /** Top-k within the query's own bucket. */
   def probeBucketed(spark: org.apache.spark.sql.SparkSession, path: String,
@@ -382,32 +373,11 @@ object Similarity {
   /** [[probeBucketedBatch]] against a pre-opened handle (serving form). */
   def probeBucketedBatch(store: BucketedStore, idCol: String, vecCol: String,
                          queries: DataFrame, qIdCol: String, qVecCol: String,
-                         k: Int, multiProbe: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val planes = store.planes
-    // bucket hash materialized once per query row (see lshKnnJoinMulti)
-    val probed =
-      if (multiProbe) array((col("_b0") +: planes.indices.map(j =>
-        col("_b0").bitwiseXOR(lit(1 << j)))): _*)
-      else array(col("_b0"))
-    val qB = queries
-      .select(col(qIdCol).cast("long").as("qid"), col(qVecCol).as("qv"))
-      .withColumn("_b0", lshBucket(col("qv"), planes))
-      .withColumn("bucket", explode(probed))
-      .drop("_b0")
-      .localCheckpoint()
-    // the touched-bucket union prunes the store read at partition level
-    val buckets = qB.select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    store.rows
-      .filter(col("bucket").isin(buckets: _*))
-      .join(broadcast(qB), Seq("bucket"))
-      .withColumn("dist", dist(col(vecCol), col("qv")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dist").asc_nulls_last, col(idCol))))
-      .filter(col("rn") <= k)
+                         k: Int, multiProbe: Boolean): DataFrame =
+    rankExact(PartitionedStore.probedJoin(store.rows,
+        queryBuckets(queries, qIdCol, qVecCol, store.planes, multiProbe),
+        "bucket"), idCol, vecCol, k)
       .select(col("qid"), col(idCol), col("bucket"), col("dist"))
-  }
 
   /** Lloyd's k-means refinement of the IVF coarse quantizer: start from
     * the deterministic first-C seed, then `iters` rounds of map-only
@@ -459,11 +429,8 @@ object Similarity {
                  centroids: Array[(Long, Array[Double])], nprobe: Int,
                  q: Seq[Double], k: Int): DataFrame = {
     val probe = ivfProbeLists(centroids, q, nprobe)
-    emb.withColumn("list_id", ivfListId(col(vecCol), centroids))
-      .filter(col("list_id").isin(probe: _*))
-      .withColumn("dist", dist(col(vecCol), doubleVec(q)))
-      .orderBy(col("dist").asc_nulls_last, col(idCol))
-      .limit(k)
+    rankExact(emb.withColumn("list_id", ivfListId(col(vecCol), centroids))
+      .filter(col("list_id").isin(probe: _*)), idCol, vecCol, q, k)
   }
 
   /** The `nprobe` centroid lists nearest to a query — computed on the
@@ -509,21 +476,17 @@ object Similarity {
     * instead of a plan constant. Returns (qid, qv, list_id). */
   private[graft] def probeListsJoin(queries: DataFrame, qIdCol: String,
                                     qVecCol: String, centRel: DataFrame,
-                                    nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    queries
-      .select(col(qIdCol).cast("long").as("qid"),
-        col(qVecCol).cast("array<double>").as("qv"))
-      .crossJoin(broadcast(
-        centRel.select(col("list_id").cast("long"),
-          col("cv").cast("array<double>").as("cv"))))
-      .select(col("qid"), col("qv"), col("list_id"),
-        dist(col("qv"), col("cv")).as("cd"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cd"), col("list_id"))))
-      .filter(col("rn") <= nprobe)
+                                    nprobe: Int): DataFrame =
+    topKPerQuery(queries
+        .select(col(qIdCol).cast("long").as("qid"),
+          col(qVecCol).cast("array<double>").as("qv"))
+        .crossJoin(broadcast(
+          centRel.select(col("list_id").cast("long"),
+            col("cv").cast("array<double>").as("cv"))))
+        .select(col("qid"), col("qv"), col("list_id"),
+          dist(col("qv"), col("cv")).as("cd")),
+        nprobe, col("cd"), col("list_id"))
       .select(col("qid"), col("qv"), col("list_id"))
-  }
 
   /** Batch IVF kNN JOIN — the similarity-join scale path (the ANN
     * analog of [[BruteForce.knnJoin]]): every row of a SMALL query
@@ -540,46 +503,32 @@ object Similarity {
   def ivfKnnJoin(emb: DataFrame, idCol: String, vecCol: String,
                  queries: DataFrame, qIdCol: String, qVecCol: String,
                  numLists: Int, nprobe: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cents = ivfCentroids(emb, idCol, vecCol, numLists)
     val qProbe = probeListsJoin(queries, qIdCol, qVecCol,
       centroidRelation(emb.sparkSession, cents), nprobe)
-    emb
-      .withColumn("list_id", ivfListId(col(vecCol), cents))
-      .join(broadcast(qProbe), Seq("list_id"))
-      .withColumn("dist", dist(col(vecCol), col("qv")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dist").asc_nulls_last, col(idCol))))
-      .filter(col("rn") <= k)
+    rankExact(emb
+        .withColumn("list_id", ivfListId(col(vecCol), cents))
+        .join(broadcast(qProbe), Seq("list_id")), idCol, vecCol, k)
       .select(col("qid"), col(idCol), col("dist"))
   }
 
   /** Persist embeddings partitioned by IVF list (the 100 TB serving
     * layout for the IVF path, mirroring writeBucketed): a probe reads
     * only its nprobe list partitions. The centroid set is persisted
-    * next to the store so probes don't need the original table. */
+    * next to the store so probes don't need the original table. Layout
+    * rules: [[PartitionedStore]]. */
   def writeIvf(emb: DataFrame, idCol: String, vecCol: String,
                numLists: Int, path: String): Unit = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     val centroids = ivfCentroids(emb, idCol, vecCol, numLists)
-    emb.withColumn("list_id", ivfListId(col(vecCol), centroids))
-      // one file per list per owning task, not one per upstream task
-      // per list (see IvfPq.write's measured note)
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(path)
-    centroids.map { case (lid, cv) => (lid, cv.toSeq) }.toSeq
-      .toDF("list_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(path + ".centroids")
+    writeRows(emb.withColumn("list_id", ivfListId(col(vecCol), centroids)),
+      "list_id", "overwrite", path)
+    PartitionedStore.writeCentroids(emb.sparkSession, centroids, path)
   }
 
   /** The store's frozen coarse-centroid set, from its sidecar. */
   def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
                        path: String): Array[(Long, Array[Double])] =
-    spark.read.parquet(path + ".centroids")
-      .select(col("list_id").cast("long"), col("centroid"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    PartitionedStore.readCentroids(spark, path)
 
   /** INCREMENTAL maintenance of a persisted IVF store: assign the new
     * vectors to their lists with the store's OWN centroid sidecar (the
@@ -595,10 +544,8 @@ object Similarity {
   def appendIvf(spark: org.apache.spark.sql.SparkSession, path: String,
                 newVecs: DataFrame, vecCol: String): Unit = {
     val centroids = readIvfCentroids(spark, path)
-    newVecs
-      .withColumn("list_id", ivfListId(col(vecCol), centroids))
-      .repartition(col("list_id"))
-      .write.mode("append").partitionBy("list_id").parquet(path)
+    writeRows(newVecs.withColumn("list_id", ivfListId(col(vecCol), centroids)),
+      "list_id", "append", path)
   }
 
   /** A pre-opened IVF serving handle: the store DataFrame (partition
@@ -624,11 +571,8 @@ object Similarity {
   def probeIvf(store: IvfStore, idCol: String, vecCol: String,
                q: Seq[Double], nprobe: Int, k: Int): DataFrame = {
     val probe = ivfProbeLists(store.centroids, q, nprobe)
-    store.rows
-      .filter(col("list_id").isin(probe: _*))
-      .withColumn("dist", dist(col(vecCol), doubleVec(q)))
-      .orderBy(col("dist").asc_nulls_last, col(idCol))
-      .limit(k)
+    rankExact(store.rows.filter(col("list_id").isin(probe: _*)),
+      idCol, vecCol, q, k)
   }
 
   /** FILTERED probe: top-k among rows satisfying `pred` within the
@@ -648,12 +592,8 @@ object Similarity {
                     q: Seq[Double], nprobe: Int, k: Int,
                     pred: Column): DataFrame = {
     val probe = ivfProbeLists(store.centroids, q, nprobe)
-    store.rows
-      .filter(col("list_id").isin(probe: _*))
-      .filter(pred)
-      .withColumn("dist", dist(col(vecCol), doubleVec(q)))
-      .orderBy(col("dist").asc_nulls_last, col(idCol))
-      .limit(k)
+    rankExact(store.rows.filter(col("list_id").isin(probe: _*)).filter(pred),
+      idCol, vecCol, q, k)
   }
 
   /** [[probeIvfWhere]] with the filter arriving as an ALLOW-LIST
@@ -666,13 +606,10 @@ object Similarity {
                       q: Seq[Double], nprobe: Int, k: Int,
                       allowed: DataFrame, allowedIdCol: String): DataFrame = {
     val probe = ivfProbeLists(store.centroids, q, nprobe)
-    store.rows
+    rankExact(store.rows
       .filter(col("list_id").isin(probe: _*))
       .join(allowed.select(col(allowedIdCol).as(idCol)).distinct(),
-        Seq(idCol), "left_semi")
-      .withColumn("dist", dist(col(vecCol), doubleVec(q)))
-      .orderBy(col("dist").asc_nulls_last, col(idCol))
-      .limit(k)
+        Seq(idCol), "left_semi"), idCol, vecCol, q, k)
   }
 
   /** BATCH probe of a persisted IVF store — [[ivfKnnJoin]] against the
@@ -696,20 +633,10 @@ object Similarity {
   def probeIvfBatch(store: IvfStore, idCol: String, vecCol: String,
                     queries: DataFrame, qIdCol: String, qVecCol: String,
                     nprobe: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val centRel = centroidRelation(store.rows.sparkSession, store.centroids)
-    val qProbe = probeListsJoin(queries, qIdCol, qVecCol, centRel, nprobe)
-      .localCheckpoint()
-    // the touched-list union prunes the parquet read at partition level
-    val lists = qProbe.select("list_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    store.rows
-      .filter(col("list_id").isin(lists: _*))
-      .join(broadcast(qProbe), Seq("list_id"))
-      .withColumn("dist", dist(col(vecCol), col("qv")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dist").asc_nulls_last, col(idCol))))
-      .filter(col("rn") <= k)
+    rankExact(PartitionedStore.probedJoin(store.rows,
+        probeListsJoin(queries, qIdCol, qVecCol, centRel, nprobe), "list_id"),
+        idCol, vecCol, k)
       .select(col("qid"), col(idCol), col("dist"))
   }
 }

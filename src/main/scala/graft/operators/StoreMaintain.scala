@@ -3,15 +3,16 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Partition-level DELETE shared by the three persisted ANN serving
-  * stores (LSH-bucketed, IVF, IVFADC): each lays rows out as parquet
-  * partitioned by its routing column (`bucket` / `list_id`), so a batch
-  * remove is the same operation on all three — find the partitions
-  * holding any doomed row, rewrite exactly those partitions without the
-  * doomed rows, and drop the directories the delete emptied. Completes
-  * the serving maintenance matrix next to the append paths
+/** Partition-level DELETE shared by the five persisted vector stores
+  * (LSH-bucketed, IVF-flat, IVF-PQ/OPQ, IVF-SQ8, binary): each lays
+  * rows out as parquet partitioned by its routing column (`bucket` /
+  * `list_id`, see [[PartitionedStore]]), so a batch remove is the same
+  * operation on all of them — find the partitions holding any doomed
+  * row, rewrite exactly those partitions without the doomed rows, and
+  * drop the directories the delete emptied. Completes the serving
+  * maintenance matrix next to the append paths
   * ([[Similarity.appendBucketed]], [[Similarity.appendIvf]],
-  * [[IvfPq.append]]).
+  * [[IvfPq.append]], [[IvfSq.append]], [[BinaryIndex.append]]).
   *
   * The reference's remove surface is the in-memory
   * MemoryVectorIndex.Remove (MemoryVectorIndex.cs:358-489);
@@ -29,9 +30,10 @@ object StoreMaintain {
 
   /** Remove every row whose `idCol` appears in `ids` from the
     * partitioned store at `path`. `partCol` is the store's partition
-    * column (`bucket` for LSH, `list_id` for IVF / IVFADC). Sidecars
-    * (centroids / codebook / planes) are untouched — the quantizer
-    * stays frozen across deletes, exactly as on append. */
+    * column (`bucket` for LSH and binary, `list_id` for the IVF
+    * stores). Sidecars (centroids / codebook / planes / extent / thr /
+    * opq) are untouched — the quantizer stays frozen across deletes,
+    * exactly as on append. */
   def removeFromStore(spark: SparkSession, path: String, ids: DataFrame,
                       idCol: String, partCol: String): Unit = {
     val store = spark.read.parquet(path)

@@ -190,7 +190,7 @@ class ScaleSpec extends SparkSpec {
     IvfPq.append(spark, s"$base/store", fresh, "vec_id", "embedding")
     // reference: assign the WHOLE corpus with the old store's frozen
     // centroid + codebook sidecars (a full re-write would re-train)
-    val cents = IvfPq.readCentroids(spark, s"$base/store")
+    val cents = operators.PartitionedStore.readCentroids(spark, s"$base/store")
     val cb = IvfPq.readCodebook(spark, s"$base/store")
     def key(df: org.apache.spark.sql.DataFrame) = df
       .select(col("vec_id"), col("list_id").cast("long"),

@@ -3,7 +3,7 @@
 scale factor, then compare every query's parquet output against its DuckDB
 oracle (columns sorted by name, rows compared in emitted order and as
 sorted multisets)."""
-import json, subprocess, sys, math
+import json, os, subprocess, sys, math
 
 # positional args only — a flag like --skip=d25 must not be mistaken
 # for the dataset selector (ADVICE r13)
@@ -13,7 +13,10 @@ SF = _pos[0] if _pos else "sf0.001"
 # /root/repo/.sf1 from tools/make_sf1.py); a bare name maps to the
 # driver testdata as before
 SFDIR = SF if SF.startswith("/") else f"/root/testdata/{SF}"
-OUT = f"/tmp/verify_{SF.replace('/', '_')}"
+# Verify output goes under the checkout's git-ignored .tmp/, so runs of
+# two checkouts side by side never share an output directory
+OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                   ".tmp", f"verify_{SF.replace('/', '_')}")
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 

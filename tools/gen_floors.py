@@ -22,7 +22,7 @@ scale_override (e.g. v9's multi-doc search finds 0 neighbours in the
 500-vector sf0.001 slice but 1+ from sf0.01 up).
 
 Run AFTER a green `tools/check.py sf0.001` + `tools/check.py sf0.01`
-(it reads their /tmp/verify_* outputs).
+(it reads their .tmp/verify_* outputs).
 """
 import json, os, sys
 
@@ -43,7 +43,7 @@ SF1_ADJUDICATED = {"q24_heavy_hitters", "q45_group_heavy_hitters",
 
 
 def counts_for(scale):
-    out = f"/tmp/verify_{scale}"
+    out = os.path.join(REPO, ".tmp", f"verify_{scale}")
     if not os.path.isdir(out):
         sys.exit(f"{out} missing — run tools/check.py {scale} first")
     con = duckdb.connect()

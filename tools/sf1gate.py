@@ -39,7 +39,7 @@ def main():
         print(f"sf1 dataset present at {SF1} (use --fresh to rebuild)")
 
     # oracle replay — capture check.py's per-gate lines. --no-run
-    # passes through: re-parse an existing /tmp/verify_* dump (e.g.
+    # passes through: re-parse an existing .tmp/verify_* dump (e.g.
     # after re-running graft.Verify for a crashed subset) without
     # re-running the whole engine pass.
     extra = [a for a in sys.argv if a == "--no-run"]
